@@ -1,0 +1,5 @@
+"""The osmgraft benchmark: three workloads, checked outputs, per-layer traces.
+
+Run ``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
+--trace <0|1>`` from the repository root; see ``perfbench/README.md``.
+"""
