@@ -27,7 +27,7 @@ def s2_cell_udf(level: int = 13):
 
 def h3_cell_udf(res: int = 7):
     """Uber-H3-compatible cell ids (functions/h3real.py — bit-identical to
-    h3.latlng_to_cell; round 3 closed the h3ish id divergence)."""
+    h3.latlng_to_cell)."""
     from osmgraft.functions.h3real import latlng_to_cell
 
     @F.pandas_udf(LongType())

@@ -1,9 +1,8 @@
 """Uber-H3-compatible cell index (latLngToCell, res 0-15) from scratch.
 
 This module produces cell ids BIT-IDENTICAL to Uber H3's ``latLngToCell`` —
-a user can join them against externally-produced H3 data.  It exists because
-the north rule names "H3 res-7/-9" and round-2's ``h3ish`` aperture-7 kernel
-deliberately diverged (documented non-goal then; closed now).
+a user can join them against externally-produced H3 data.  It is the
+engine's only H3 implementation.
 
 Everything here derives from PUBLIC knowledge:
 

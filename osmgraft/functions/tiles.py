@@ -79,19 +79,6 @@ LON7_SPAN = 3_600_000_000
 LON7_HALF = 1_800_000_000
 
 
-def tile_lon7_west(x: Column, z: int) -> Column:
-    """Exact fixed-point west edge of tile column x: x·span/2^z − half.
-    Integer arithmetic — bitwise identical on every engine."""
-    return (x.cast("long") * F.lit(LON7_SPAN) / F.lit(2**z)).cast("long") - F.lit(LON7_HALF)
-
-
-def sql_tile_lon7_west(x_expr: str, z: int) -> str:
-    return (
-        f"(CAST(CAST(({x_expr}) AS BIGINT) * {LON7_SPAN} / {2**z} AS BIGINT)"
-        f" - {LON7_HALF})"
-    )
-
-
 def np_tile_lat_bounds(y: np.ndarray, z: int) -> tuple[np.ndarray, np.ndarray]:
     """(south, north) latitude degrees of tile row y — inverse gudermannian
     lat = atan(sinh(pi·(1 − 2y/2^z))). Float (libm); pinned by the roundtrip

@@ -1,11 +1,12 @@
-"""Geometry kernels: vectorized ray-casting point-in-polygon, STR-tree bbox
-index, haversine, and the exact fixed-point planar metric used for kNN.
+"""Geometry kernels: vectorized ray-casting point-in-polygon (float and
+exact-integer tests sharing one candidate refine loop), a packed STR-tree bbox
+index with implicit children, and haversine distances.
 
 All coordinates are fixed-point int (lat7/lon7 = degrees × 1e7 — osmio
 lib.rs:66-71). PIP arithmetic runs in float64 on the raw fixed-point values
 (ints < 2^31 are exact in float64); every operation is an IEEE-754 primitive,
-so the numpy kernel, the Spark expression form, and the DuckDB oracle SQL
-produce bit-identical booleans (same expression shape everywhere):
+so the numpy kernel and the DuckDB oracle SQL produce bit-identical booleans
+(same expression shape in both):
 
     crosses = ((y1 > y) != (y2 > y)) AND (x < (x2-x1)*(y-y1)/(y2-y1) + x1)
     inside  = parity(sum crosses) == odd        # even-odd rule; holes free
@@ -69,90 +70,96 @@ pip AS (
 
 
 # --- STR-tree (sorted-tile-recursive bbox packing; Leutenegger et al. 1997) ----
+STR_CAP = 16  # entries per tree node
+
+
 class STRTree:
     """Static bbox index over polygons, built once on the driver and shipped to
     executors inside the broadcast PIP kernel (SURVEY.md §4 item 2).
 
-    Packing: sort by x-center into vertical slices of ~sqrt(n/cap) tiles, sort
-    each slice by y-center, chunk into leaves of ``cap``; build upper levels the
-    same way until one root. Query is an iterative stack walk over numpy arrays
-    (no Python objects per node beyond level slices).
+    Packed with implicit children: the polygon boxes are STR-sorted once (x
+    slices of ~sqrt(n/16) tiles, y within a slice) into the leaf level, and
+    node i of level k+1 covers entries ``[i*16, (i+1)*16)`` of level k, so
+    only one box array per level is stored. ``levels`` holds the levels below
+    the root, leaf first; a set of at most 16 polygons is root-only.
+
+    A query tests every point against the root boxes in one broadcast
+    compare, then each descent step expands the surviving (point, node)
+    frontier to the node's children with ``np.repeat`` plus an arange offset
+    and filters by bbox — whole-array steps, no per-point or per-node loop.
     """
 
-    def __init__(self, bboxes: np.ndarray, cap: int = 16):
-        # bboxes: (n, 4) [ymin, xmin, ymax, xmax] float64
-        self.bboxes = np.asarray(bboxes, dtype=np.float64)
-        n = len(self.bboxes)
-        self.levels: list[tuple[np.ndarray, np.ndarray]] = []  # (boxes, child_index_lists)
-        idx = np.arange(n)
-        boxes = self.bboxes
-        while len(idx) > cap:
-            order = self._str_order(boxes)
-            idx, boxes = idx[order], boxes[order]
-            groups = [np.arange(i, min(i + cap, len(idx))) for i in range(0, len(idx), cap)]
-            gboxes = np.array(
-                [
-                    [boxes[g, 0].min(), boxes[g, 1].min(), boxes[g, 2].max(), boxes[g, 3].max()]
-                    for g in groups
-                ]
-            )
-            self.levels.append((boxes.copy(), [idx[g] for g in groups]))
-            idx = np.arange(len(groups))
-            boxes = gboxes
-            # children of level k node i = self.levels[k][1][i] (original ids at k=0)
+    def __init__(self, bboxes: np.ndarray):
+        # bboxes: (n, 4) [ymin, xmin, ymax, xmax]
+        boxes = np.asarray(bboxes, dtype=np.float64).reshape(-1, 4)
+        self.order = _str_order(boxes)  # leaf entry -> polygon index
+        boxes = boxes[self.order]
+        self.levels: list[np.ndarray] = []
+        while len(boxes) > STR_CAP:
+            self.levels.append(boxes)
+            boxes = _pack_boxes(boxes)
         self.root_boxes = boxes
-        self.root_ids = idx
-
-    @staticmethod
-    def _str_order(boxes: np.ndarray) -> np.ndarray:
-        cx = (boxes[:, 1] + boxes[:, 3]) / 2
-        cy = (boxes[:, 0] + boxes[:, 2]) / 2
-        s = max(1, int(np.ceil(np.sqrt(len(boxes) / 16))))
-        xr = np.argsort(cx, kind="stable")
-        slice_of = np.empty(len(boxes), dtype=np.int64)
-        slice_of[xr] = np.arange(len(boxes)) // max(1, len(boxes) // s + 1)
-        return np.lexsort((cy, slice_of))
 
     def query_point_batch(self, lat7: np.ndarray, lon7: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """Return (point_row_idx, polygon_idx) candidate pairs by bbox contain."""
+        """Return (point_row_idx, polygon_idx) candidate pairs by bbox contain,
+        grouped by point in ascending row order."""
         y = lat7.astype(np.float64)
         x = lon7.astype(np.float64)
-        if not self.levels:
-            # brute bbox test against all polys (root-only tree)
-            hit = (
-                (y[:, None] >= self.bboxes[None, :, 0])
-                & (x[:, None] >= self.bboxes[None, :, 1])
-                & (y[:, None] <= self.bboxes[None, :, 2])
-                & (x[:, None] <= self.bboxes[None, :, 3])
-            )
-            pi, gi = np.nonzero(hit)
-            return pi, gi
-        # walk levels top-down keeping (point, node) frontier
-        pi = np.repeat(np.arange(len(y)), len(self.root_ids))
-        ni = np.tile(self.root_ids, len(y))
-        boxes = self.root_boxes
-        for level in range(len(self.levels) - 1, -1, -1):
+        b = self.root_boxes
+        pi, ni = np.nonzero(
+            (y[:, None] >= b[None, :, 0]) & (x[:, None] >= b[None, :, 1])
+            & (y[:, None] <= b[None, :, 2]) & (x[:, None] <= b[None, :, 3])
+        )
+        for b in reversed(self.levels):
+            first = ni * STR_CAP
+            n_child = np.minimum(first + STR_CAP, len(b)) - first
+            start = np.cumsum(n_child) - n_child  # frontier offset of each node's first child
+            pi = np.repeat(pi, n_child)
+            ni = np.repeat(first - start, n_child) + np.arange(len(pi))
             keep = (
-                (y[pi] >= boxes[ni, 0]) & (x[pi] >= boxes[ni, 1])
-                & (y[pi] <= boxes[ni, 2]) & (x[pi] <= boxes[ni, 3])
+                (y[pi] >= b[ni, 0]) & (x[pi] >= b[ni, 1])
+                & (y[pi] <= b[ni, 2]) & (x[pi] <= b[ni, 3])
             )
             pi, ni = pi[keep], ni[keep]
-            lboxes, children = self.levels[level]
-            new_pi, new_ni = [], []
-            for p, nid in zip(pi, ni):
-                ch = children[nid]
-                new_pi.append(np.full(len(ch), p))
-                new_ni.append(ch)
-            if not new_pi:
-                return np.array([], dtype=np.int64), np.array([], dtype=np.int64)
-            pi = np.concatenate(new_pi)
-            ni = np.concatenate(new_ni)
-            boxes = lboxes if level > 0 else self.bboxes
-        keep = (
-            (y[pi] >= self.bboxes[ni, 0]) & (x[pi] >= self.bboxes[ni, 1])
-            & (y[pi] <= self.bboxes[ni, 2]) & (x[pi] <= self.bboxes[ni, 3])
-        )
-        return pi[keep], ni[keep]
+        return pi, self.order[ni]
+
+
+def _str_order(boxes: np.ndarray) -> np.ndarray:
+    cx = (boxes[:, 1] + boxes[:, 3]) / 2
+    cy = (boxes[:, 0] + boxes[:, 2]) / 2
+    s = max(1, int(np.ceil(np.sqrt(len(boxes) / STR_CAP))))
+    xr = np.argsort(cx, kind="stable")
+    slice_of = np.empty(len(boxes), dtype=np.int64)
+    slice_of[xr] = np.arange(len(boxes)) // max(1, len(boxes) // s + 1)
+    return np.lexsort((cy, slice_of))
+
+
+def _pack_boxes(boxes: np.ndarray) -> np.ndarray:
+    """Parent level: the bbox of each run of STR_CAP consecutive entries."""
+    starts = np.arange(0, len(boxes), STR_CAP)
+    return np.stack(
+        [
+            np.minimum.reduceat(boxes[:, 0], starts),
+            np.minimum.reduceat(boxes[:, 1], starts),
+            np.maximum.reduceat(boxes[:, 2], starts),
+            np.maximum.reduceat(boxes[:, 3], starts),
+        ],
+        axis=1,
+    )
+
+
+def refine_pairs(lat7, lon7, pair_point_idx, pair_poly_idx, edges, test) -> np.ndarray:
+    """Exact containment of candidate (point, polygon) pairs: bool mask over
+    the pairs. ``edges[g]`` holds polygon g's edge array and ``test`` is
+    :func:`pnpoly` or :func:`pnpoly_int`; each distinct polygon is tested
+    once against all of its candidate points."""
+    keep = np.zeros(len(pair_point_idx), dtype=bool)
+    by_poly = np.argsort(pair_poly_idx, kind="stable")
+    polys, first = np.unique(pair_poly_idx[by_poly], return_index=True)
+    for g, sel in zip(polys, np.split(by_poly, first[1:])):
+        pts = pair_point_idx[sel]
+        keep[sel] = test(lat7[pts], lon7[pts], edges[g])
+    return keep
 
 
 def polygon_bbox(poly: dict) -> tuple[float, float, float, float]:
@@ -192,16 +199,6 @@ def np_haversine_m(lat7a, lon7a, lat7b, lon7b) -> np.ndarray:
     dlo = np.radians((lon7b - lon7a) / 1e7)
     h = np.sin(dla / 2) ** 2 + np.cos(la) * np.cos(lb) * np.sin(dlo / 2) ** 2
     return 2 * EARTH_RADIUS_M * np.arcsin(np.sqrt(h))
-
-
-def sql_dist2(a_lat: str, a_lon: str, b_lat: str, b_lon: str) -> str:
-    """Exact int64 planar metric used for cross-engine-deterministic kNN."""
-    return (
-        f"(CAST(({a_lat}) AS BIGINT) - CAST(({b_lat}) AS BIGINT)) * "
-        f"(CAST(({a_lat}) AS BIGINT) - CAST(({b_lat}) AS BIGINT)) + "
-        f"(CAST(({a_lon}) AS BIGINT) - CAST(({b_lon}) AS BIGINT)) * "
-        f"(CAST(({a_lon}) AS BIGINT) - CAST(({b_lon}) AS BIGINT))"
-    )
 
 
 def haversine_m_col(a_lat, a_lon, b_lat, b_lon):

@@ -1089,7 +1089,7 @@ def _h3_oracle(res: int) -> str:
 @register("cell_counts_h3_r7", _h3_oracle(7))  # hash-gated since round 3
 def cell_counts_h3_r7(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uber-H3 res-7 cell counts (functions/h3real.py — ids bit-identical to
-    h3.latlng_to_cell; the r2 h3ish divergence is closed). The DuckDB twin
+    h3.latlng_to_cell). The DuckDB twin
     (h3real.sql_h3_cell) re-implements the full encoder in SQL — gnomonic
     face projection, aperture-7 digit chain, base-cell/rotation lookup,
     pentagon fixups — converting this query from rows-only to hash-gated;
@@ -8846,9 +8846,8 @@ def pip_inner_intexact(spark: SparkSession, sf_dir: str) -> DataFrame:
     refine='parity_int', kernel geom.pnpoly_int): the ray-crossing
     comparison is an int64 cross-product sign instead of a float divide —
     no ULP behavior on knife-edge points, every product provably in range.
-    SAME oracle as pip_inner: three arithmetic models now share one hash
-    (float numpy kernel, unrolled-JVM-expression cross-check, exact-integer
-    kernel), so a disagreement in any crossing rule or boundary convention
+    SAME oracle as pip_inner: the float and exact-integer kernels share one
+    hash, so a disagreement in either crossing rule or boundary convention
     flips a gate."""
     pts = points_from_orders(spark, sf_dir)
     return pip_join(

@@ -30,19 +30,21 @@ def _pts_df(spark, n=5000, hot_frac=0.4):
     )
 
 
-def test_salted_equals_broadcast(spark):
+def test_salted_equals_broadcast(spark, many_rings):
+    """Admin rings (root-only STR tree) and 300 seeded rings (multi-level)."""
     pts = _pts_df(spark)
-    want = {
-        (r.point_id, r.boundary_id)
-        for r in pip_join(pts, ADMIN_BOUNDARIES, how="inner").collect()
-    }
-    got = {
-        (r.point_id, r.boundary_id)
-        for r in cell_pip_join(
-            pts, ADMIN_BOUNDARIES, skew_threshold=100, salt_target=50, max_salts=16
-        ).collect()
-    }
-    assert got == want  # no dupes, no drops, exact same match set
+    for polys in (ADMIN_BOUNDARIES, many_rings):
+        want = sorted(
+            (r.point_id, r.boundary_id)
+            for r in pip_join(pts, polys, how="inner").collect()
+        )
+        got = sorted(
+            (r.point_id, r.boundary_id)
+            for r in cell_pip_join(
+                pts, polys, skew_threshold=100, salt_target=50, max_salts=16
+            ).collect()
+        )
+        assert want and got == want  # no dupes, no drops, exact same match set
 
 
 def test_no_salting_path(spark):

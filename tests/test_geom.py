@@ -2,8 +2,9 @@
 correctness, and the PIP join operator incl. semi/anti."""
 
 import numpy as np
+import pytest
 
-from osmgraft.geom import STRTree, pnpoly, polygon_bbox, polygon_edges
+from osmgraft.geom import STRTree, pnpoly, polygon_edges
 from osmgraft.operators.pip import pip_join
 from osmgraft.synth import ADMIN_BOUNDARIES, admin_boundaries_df
 
@@ -46,20 +47,28 @@ def test_lshape_nonconvex():
 
 
 def test_strtree_candidates_superset():
-    polys = ADMIN_BOUNDARIES
-    bboxes = np.array([polygon_bbox(p) for p in polys])
-    tree = STRTree(bboxes, cap=4)  # force multi-level
+    """query_point_batch returns exactly the brute-force bbox pair set (no
+    drops, no duplicates) on a tree with intermediate levels: 2,400
+    overlapping boxes pack into 3 levels at 16 entries per node."""
     rng = np.random.default_rng(3)
-    lat = rng.integers(-900_000_000, 900_000_000, 2000)
-    lon = rng.integers(-1_800_000_000, 1_800_000_000, 2000)
+    n = 2400
+    lat0 = rng.integers(-800_000_000, 800_000_000, n)
+    lon0 = rng.integers(-1_750_000_000, 1_750_000_000, n)
+    bboxes = np.stack(
+        [lat0, lon0, lat0 + rng.integers(1, 100_000_000, n), lon0 + rng.integers(1, 100_000_000, n)],
+        axis=1,
+    ).astype(np.float64)
+    tree = STRTree(bboxes)
+    assert len(tree.levels) + 1 >= 3
+    lat = rng.integers(-900_000_000, 900_000_000, 20_000)
+    lon = rng.integers(-1_800_000_000, 1_800_000_000, 20_000)
     pi, gi = tree.query_point_batch(lat, lon)
-    got = set(zip(pi.tolist(), gi.tolist()))
-    # brute force bbox truth
-    want = set()
+    want = []
     for g, bb in enumerate(bboxes):
         hit = (lat >= bb[0]) & (lon >= bb[1]) & (lat <= bb[2]) & (lon <= bb[3])
-        want |= {(int(i), g) for i in np.nonzero(hit)[0]}
-    assert got == want
+        want += [(int(i), g) for i in np.nonzero(hit)[0]]
+    assert len(want) > 10_000
+    assert sorted(zip(pi.tolist(), gi.tolist())) == sorted(want)
 
 
 def test_pip_join_variants(spark):
@@ -91,20 +100,38 @@ def test_boundaries_df_builds(spark):
     assert bad == 0
 
 
-def test_pip_expr_matches_kernel(spark):
-    """pip_join_expr (codegen reference) must be bitwise-identical to the
-    Arrow-kernel pip_join for all three join modes."""
+@pytest.mark.parametrize("rings", ["admin", "many"])
+def test_pip_join_matches_brute_force(spark, many_rings, rings):
+    """pip_join (STR-tree candidates + refine) equals an index-free numpy
+    brute force — pnpoly over every polygon — for all three join modes and
+    both refine kernels, on the 12 admin rings (root-only tree) and on 300
+    seeded rings (multi-level tree)."""
     from pyspark.sql import functions as F
 
-    from osmgraft.operators.pip import pip_join, pip_join_expr
-    from osmgraft.synth import ADMIN_BOUNDARIES, points_projection
+    from osmgraft.synth import points_projection
 
+    polys = ADMIN_BOUNDARIES if rings == "admin" else many_rings
     orders = spark.range(1, 30_001, 1, 4).select(F.col("id").alias("o_orderkey"))
-    pts = points_projection(orders)
-    for how in ("inner", "left_semi", "left_anti"):
-        a = sorted(map(tuple, pip_join(pts, ADMIN_BOUNDARIES, how=how).collect()))
-        b = sorted(map(tuple, pip_join_expr(pts, ADMIN_BOUNDARIES, how=how).collect()))
-        assert a == b, how
+    pts = points_projection(orders).cache()
+    rows = pts.collect()
+    pid = np.array([r.point_id for r in rows])
+    lat = np.array([r.lat7 for r in rows])
+    lon = np.array([r.lon7 for r in rows])
+    want_inner = []
+    for p in polys:
+        inside = pnpoly(lat, lon, polygon_edges(p))
+        want_inner += [(int(i), p["boundary_id"]) for i in pid[inside]]
+    want_semi = sorted({i for i, _ in want_inner})
+    want_anti = sorted(set(pid.tolist()) - set(want_semi))
+    assert len(want_inner) > 1000 and len(want_anti) > 1000
+    for refine in ("raycast", "parity_int"):
+        inner = pip_join(pts, polys, how="inner", refine=refine).collect()
+        assert sorted((r.point_id, r.boundary_id) for r in inner) == sorted(want_inner), refine
+        semi = pip_join(pts, polys, how="left_semi", refine=refine).collect()
+        assert sorted(r.point_id for r in semi) == want_semi, refine
+        anti = pip_join(pts, polys, how="left_anti", refine=refine).collect()
+        assert sorted(r.point_id for r in anti) == want_anti, refine
+    pts.unpersist()
 
 
 def test_haversine_m_col_matches_numpy(spark):
